@@ -136,7 +136,7 @@ def main() -> int:
                 pass
 
     # NOTE on the wide-at-rest layout: production would materialize_wide
-    # once and register_wide_path so every per-window kernel is a
+    # once and feed every per-window kernel from read_wide, a
     # zero-exchange scan (plan-contract-tested).  The bench deliberately
     # measures the full derive-from-events path per query — at sf0.1 the
     # one-time ETL write costs exactly what it saves, and hiding it

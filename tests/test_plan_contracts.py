@@ -204,38 +204,6 @@ def test_wide_at_rest_zero_exchange(spark, tmp_path):
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_register_wide_path_routes_wearable_wide(spark, tmp_path):
-    """bench.py's ETL-once routing: after register_wide_path, every
-    wearable_wide(spark, sf_dir) call serves the at-rest scan (zero
-    exchanges) with values identical to the derived path."""
-    from tsengine.sources.wearable import (
-        materialize_wide,
-        register_wide_path,
-        unregister_wide_path,
-        wearable_wide,
-    )
-
-    derived = wearable_wide(spark, SF).toPandas()
-    path = str(tmp_path / "wide")
-    materialize_wide(spark, SF, path)
-    register_wide_path(SF, path)
-    try:
-        routed_df = wearable_wide(spark, SF)
-        assert _n_exchanges(routed_df) == 0, "routed wide table still shuffles"
-        routed = routed_df.toPandas()
-    finally:
-        # evicts the plans memoized while the tmp path was registered
-        # (ADVICE r13: a bare _WIDE_AT_REST.clear() left them pinned)
-        unregister_wide_path(SF)
-
-    import pandas as pd
-
-    cols = sorted(derived.columns)
-    a = derived[cols].sort_values("window_id").reset_index(drop=True)
-    b = routed[cols].sort_values("window_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_mining_family_plan_shapes(spark):
     """Scale claims from tsengine/operators/mining.py docstrings:
     reservoir_sample is a shuffle-free TakeOrdered (per-partition top-k,

@@ -362,9 +362,13 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same stream because a doc's span count IS
     ``size(toks) - K + 1``.  One scan, one span-sized exchange (16-byte
     (doc_id, h) rows), one doc-sized rollup, zero joins (noop 1.95s ->
-    0.91s, 2.1x).  Hot-span skew lands a popular hash on one window partition
-    exactly as it landed on one reducer in the semi-join form — same
-    exposure, pinned by tests/test_skew.py."""
+    0.91s, 2.1x).  Hot-span skew lands a popular hash on one window
+    partition, as it landed on one reducer in the semi-join form, but
+    with more exposure: the old groupBy(h) collapsed a hot hash in its
+    map-side partial aggregation, while WindowExec shuffles and buffers
+    every row of it in one partition frame (spilling at scale).
+    Exactness under skew is pinned by tests/test_skew.py; its cost on a
+    skewed corpus at scale is not measured."""
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "toks", F.split("text", " ")
     )
@@ -583,6 +587,9 @@ def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 _V2_MIN_TOKENS = 10
 _V2_MAX_DUP = 0.5
 _V2_KEEP_PCT = 80
+# pipeline_corpus_v2 drops the join back to its survivors: every doc the
+# token floor keeps must appear in the span stream to match the oracle
+assert _V2_MIN_TOKENS > _SPAN_K, "pipeline_corpus_v2 join elimination needs it"
 
 
 @register(

@@ -10,11 +10,12 @@ before anything is declared to the driver.
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tsengine import memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -239,16 +240,14 @@ _SAMPLE_PRIORITY: tuple[str, ...] = (
 # of its computation happens at action time.  For those (and only
 # those) re-invoking the fn per bench pass / sweep re-pays hundreds of
 # ms of py4j expression building + Catalyst analysis for a plan that is
-# provably identical; the registry memoizes the analyzed plan instead,
-# keyed by (applicationId, realpath(sf_dir), name), and serves hits as
-# a select("*") clone so each caller gets a fresh QueryExecution (see
-# tables._RELATION_MEMO for why).  NOT result caching: nothing is
+# provably identical; the registry memoizes the analyzed plan instead
+# (tsengine/memo.py, kind "query").  NOT result caching: nothing is
 # materialized, every action on the memoized plan recomputes from the
 # parquet inputs.  Purity is enforced, not assumed —
-# tests/test_round13_opt.py builds every flagged query twice and
-# asserts the warm build runs zero jobs, so a collect() sneaking into a
-# flagged fn fails the suite rather than silently moving compute out of
-# the timed region.
+# tests/test_memo.py builds every flagged query twice and asserts the
+# warm build runs zero jobs, so a collect() sneaking into a flagged fn
+# fails the suite rather than silently moving compute out of the timed
+# region.
 _PLAN_PURE: frozenset[str] = frozenset({
     "scan_examples",
     "channel_fuse",
@@ -283,28 +282,14 @@ _PLAN_PURE: frozenset[str] = frozenset({
 # by design); memoizing either would hoist real work out of the
 # measured path.
 
-_PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
-# Process-lifetime hit counter (ADVICE r13): lets measurement harnesses
-# (bench.py) record how many builds were served from the memo, making
-# the memoized-plan 'steady' semantics auditable in the artifact.
-PLAN_MEMO_HITS: int = 0
-
-
-def _memoize_plan(name: str, fn: QueryFn) -> QueryFn:
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        global PLAN_MEMO_HITS
-        key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
-        hit = _PLAN_MEMO.get(key)
-        if hit is not None:
-            PLAN_MEMO_HITS += 1
-            return hit.select("*")
-        out = fn(spark, sf_dir)
-        _PLAN_MEMO[key] = out
-        return out
-
-    return wrapped
+def __getattr__(name: str) -> int:
+    # PLAN_MEMO_HITS: process-lifetime count of query builds served from
+    # the plan memo, so measurement harnesses (bench.py) can show how many
+    # timed builds were memo hits.  Counted under the memo's lock.
+    if name == "PLAN_MEMO_HITS":
+        return memo.hits("query")
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -312,9 +297,12 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         pure = name in _PLAN_PURE
-        _REGISTRY[name] = Query(
-            name, _memoize_plan(name, fn) if pure else fn, oracle, pure
-        )
+
+        @functools.wraps(fn)
+        def from_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return memo.memoized(spark, sf_dir, "query", name, lambda: fn(spark, sf_dir))
+
+        _REGISTRY[name] = Query(name, from_memo if pure else fn, oracle, pure)
         return fn
 
     return deco

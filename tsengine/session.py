@@ -12,11 +12,14 @@ let AQE coalesce from a high initial count).
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger("tsengine")
 
 #: SQL confs the engine REQUIRES for correctness, all runtime-settable, so
 #: they can be applied to any externally-built (vanilla) SparkSession.
@@ -53,12 +56,12 @@ def ensure_runtime_env(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable on some exotic deployment: keep going
+        except Exception:  # immutable on some exotic deployment: keep going
+            _log.warning("could not set %s=%s", k, v, exc_info=True)
     try:
         _ship_package(spark)
-    except Exception:
-        pass  # e.g. no sparkContext on Connect; module-by-value still works
+    except Exception:  # e.g. no sparkContext on Connect; module-by-value still works
+        _log.warning("could not ship the tsengine package to workers", exc_info=True)
     return spark
 
 
