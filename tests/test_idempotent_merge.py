@@ -116,20 +116,19 @@ def test_compact_small_files_contract(spark, oracle_sf_dir):
     import glob
     import os
 
+    from tsengine.artifacts import scratch_dir
     from tsengine.operators.merging import (
-        _COMPACT_DIR,
         _COMPACT_FRAGMENTS,
         _COMPACT_TARGET_FILES,
         compact_small_files,
     )
-    from tsengine.sources.tables import sf_scoped_dir
 
     compact_small_files(spark, oracle_sf_dir).count()
     frag = glob.glob(
-        os.path.join(sf_scoped_dir(_COMPACT_DIR, oracle_sf_dir, "fragments"), "*.parquet")
+        os.path.join(scratch_dir(oracle_sf_dir, "compact_fragments"), "*.parquet")
     )
     comp = glob.glob(
-        os.path.join(sf_scoped_dir(_COMPACT_DIR, oracle_sf_dir, "compacted"), "*.parquet")
+        os.path.join(scratch_dir(oracle_sf_dir, "compact_compacted"), "*.parquet")
     )
     assert len(frag) == _COMPACT_FRAGMENTS
     assert 1 <= len(comp) <= _COMPACT_TARGET_FILES

@@ -29,9 +29,6 @@ import threading
 from conftest import SF_DIR as SF_A
 from conftest import SF_DIR_ORACLE as SF_B
 
-_TSENGINE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tsengine")
-
-
 def _n_exchanges(df) -> int:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return len(re.findall(r"Exchange (?:hash|range)partitioning", plan))
@@ -277,11 +274,10 @@ def test_memo_counts_every_call_under_contention(tmp_path):
 def test_no_registered_sink_writes_under_sf_dir(spark):
     """Runs the write-path queries end-to-end and asserts the fixture
     tree is byte-untouched (sizes AND mtimes).  These queries cover
-    every scratch root family: csv/json/xml/orc round trips
-    (relational), merge/compaction (merging), artifact publish
-    (similarity's knn graph uses the same sf_scoped_dir discipline but
-    is exercised in its own suite — its root is checked statically
-    below)."""
+    the scratch-dir sinks: csv/json/xml/orc round trips (relational) and
+    merge/compaction (merging).  Artifact publish (the knn graph) goes
+    through the same module and is exercised in tests/test_artifacts.py;
+    the shared root is checked statically below."""
     from tsengine.registry import all_queries
 
     qs = all_queries()
@@ -292,23 +288,16 @@ def test_no_registered_sink_writes_under_sf_dir(spark):
 
 
 def test_scratch_roots_outside_fixture_tree():
-    """Static half of the invariant: every scratch-root default in the
-    engine lives outside the fixture tree, and sf_scoped_dir can never
-    relocate an output INTO the sf_dir it tags."""
-    from tsengine.sources.tables import sf_scoped_dir
+    """Static half of the invariant: the one at-rest root the engine
+    writes under (tsengine/artifacts.py) lives outside the fixture tree,
+    and neither scratch_dir nor artifact_path can relocate an output
+    INTO the sf_dir it tags."""
+    from tsengine import artifacts
 
-    roots = []
-    for dirpath, _d, files in os.walk(_TSENGINE_ROOT):
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            src = open(os.path.join(dirpath, f)).read()
-            roots += re.findall(
-                r'os\.environ\.get\(\s*"TSENGINE_\w*DIR"\s*,\s*"([^"]+)"\)', src
-            )
-    assert roots, "expected at least one scratch-root default"
     fixture = os.path.dirname(os.path.realpath(SF_A))
-    for r in roots:
-        assert not os.path.realpath(r).startswith(fixture), r
-    out = sf_scoped_dir("/tmp/tsengine_pin", SF_A, "leaf")
-    assert not os.path.realpath(out).startswith(os.path.realpath(SF_A))
+    assert not os.path.realpath(artifacts.root()).startswith(fixture), artifacts.root()
+    for out in (
+        artifacts.scratch_dir(SF_A, "leaf"),
+        artifacts.artifact_path(SF_A, "leaf", ("events",)),
+    ):
+        assert not os.path.realpath(out).startswith(os.path.realpath(SF_A))

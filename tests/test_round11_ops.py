@@ -108,31 +108,6 @@ def test_components_stay_on_live_build_path(spark):
     assert "FlatMapGroupsInPandas" in plan
 
 
-def test_graph_path_tracks_fixture_mtime(monkeypatch):
-    """A regenerated embeddings fixture must invalidate the cache: the
-    artifact path is keyed by the parquet's NANOSECOND mtime (whole
-    seconds would silently serve a stale graph after a same-second
-    regeneration — ADVICE r11)."""
-    import types
-
-    from tsengine.operators import similarity as sim
-
-    p1 = sim._knn_graph_path(SF, 5)
-    real = os.stat
-
-    def fake(p, *a, **k):
-        if str(p).endswith("embeddings.parquet"):
-            # same whole second as a plausible regen, +1ns
-            return types.SimpleNamespace(
-                st_mtime_ns=real(p, *a, **k).st_mtime_ns + 1
-            )
-        return real(p, *a, **k)
-
-    monkeypatch.setattr(sim.os, "stat", fake)
-    p2 = sim._knn_graph_path(SF, 5)
-    assert p1 != p2
-
-
 def test_curation_v3_semantics(spark):
     """Recompute the pipeline's guarantees from its verified stages:
     (a) no output doc is a dropped (non-keep-best) cluster member;

@@ -30,8 +30,8 @@ Contracts:
   driver-side file listing and schema per key, so code that rewrites or
   re-routes an sf_dir must call :func:`invalidate` first (the path-table
   equivalent of ``REFRESH TABLE``).  No registered query writes under an
-  sf_dir — every sink goes through ``sf_scoped_dir`` into a scratch root
-  outside the fixture tree (pinned by tests/test_memo.py).
+  sf_dir — every sink and artifact goes through :mod:`tsengine.artifacts`
+  into one root outside the fixture tree (pinned by tests/test_memo.py).
 """
 
 from __future__ import annotations

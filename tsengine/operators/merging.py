@@ -33,16 +33,15 @@ Delta/Iceberg/Hudi re-expressed over vanilla partitioned parquet.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tsengine import artifacts
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.tables import load_table
 
-_MERGE_DIR = os.environ.get("TSENGINE_MERGE_DIR", "/tmp/tsengine_merge")
 _N_PARTS = 8
 _SPLIT_DATE = "1999-01-01"
 _OVR_CONF = "spark.sql.sources.partitionOverwriteMode"
@@ -115,8 +114,7 @@ def idempotent_write_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain GROUP BY over orders — a hash match proves
     both the merge algebra and its idempotence in one check."""
     orders = load_table(spark, sf_dir, "orders")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    target = os.path.join(_MERGE_DIR, f"cust_rollup_{tag}")
+    target = artifacts.scratch_dir(sf_dir, "merge_cust_rollup")
 
     with_p = lambda df: df.withColumn(  # noqa: E731
         "p", (F.col("o_custkey") % _N_PARTS).cast("int")
@@ -141,7 +139,6 @@ def idempotent_write_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_DIR = os.environ.get("TSENGINE_COMPACT_DIR", "/tmp/tsengine_compact")
 _COMPACT_TARGET_FILES = 4
 _COMPACT_FRAGMENTS = 64
 
@@ -177,8 +174,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partition's data, never the table.  ``compact_partitioned``
     below demonstrates exactly that composition with the hive layout
     of ``idempotent_write_merge``."""
-    frag = sf_scoped_dir(_COMPACT_DIR, sf_dir, "fragments")
-    out = sf_scoped_dir(_COMPACT_DIR, sf_dir, "compacted")
+    frag = artifacts.scratch_dir(sf_dir, "compact_fragments")
+    out = artifacts.scratch_dir(sf_dir, "compact_compacted")
     ev = load_table(spark, sf_dir, "events")
     # pathological layout: 64 round-robin fragments (what a chatty
     # incremental writer leaves behind)
@@ -227,7 +224,7 @@ def build_mixed_layout(spark: SparkSession, sf_dir: str) -> str:
     each), hot partitions scattered across 16 fragment files apiece —
     what a chatty incremental writer leaves behind in the partitions
     it actually lands data in."""
-    target = sf_scoped_dir(_COMPACT_DIR, sf_dir, "hive")
+    target = artifacts.scratch_dir(sf_dir, "compact_hive")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "p", (F.col("user_id") % _HIVE_N_PARTS).cast("int")
     )

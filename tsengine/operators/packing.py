@@ -37,13 +37,12 @@ HALF_UP-vs-double boundary risk) and the same left fold for the MSE
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tsengine import artifacts
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.tables import load_table
 
 _CHUNK_W = 32  # chunk width, whitespace tokens
 _CHUNK_S = 24  # chunk stride (overlap = W - S = 8)
@@ -321,46 +320,40 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _manifest_path(sf_dir: str) -> str:
-    """Artifact path for the persisted old-corpus manifest, keyed like
-    the graph artifact (similarity._knn_graph_path): sf tag, every
-    manifest dial (the split modulus and the shard budget) and the
-    DOCUMENTS fixture's nanosecond mtime, so a regenerated fixture
+    """Artifact path for the persisted old-corpus manifest: every
+    manifest dial (the split modulus and the shard budget) plus the
+    DOCUMENTS fixture's content key, so a regenerated fixture
     invalidates the cache instead of silently serving stale offsets."""
-    from tsengine.operators.similarity import _INC_MOD, _KNN_GRAPH_DIR
+    from tsengine.operators.similarity import _INC_MOD
 
-    mt = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    leaf = f"manifest_old{_INC_MOD}_b{_SHARD_B}_m{mt}"
-    return sf_scoped_dir(_KNN_GRAPH_DIR, sf_dir, leaf)
+    return artifacts.artifact_path(
+        sf_dir, f"manifest_old{_INC_MOD}_b{_SHARD_B}", ("documents",)
+    )
 
 
 def _old_manifest_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OLD-corpus (doc_id % mod != 0) shard manifest, read from
     its persisted artifact — built on first use with the identical
     two-level prefix scan as :func:`shard_manifest` restricted to the
-    old corpus, published via the shared atomic-rename protocol
-    (similarity._publish_graph, its GC covering the manifest leaf
-    family)."""
-    from tsengine.operators.similarity import _INC_MOD, _publish_graph
+    old corpus, published via :func:`tsengine.artifacts.publish`."""
+    from tsengine.operators.similarity import _INC_MOD
 
-    path = _manifest_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % _INC_MOD != 0
         )
         n = F.size(F.split("text", " "))
         base = docs.select("doc_id", "source", n.cast("long").alias("n_tokens"))
         out, _ = _global_stream_offsets(spark, base)
-        _publish_graph(
-            out.select(
-                "doc_id",
-                "source",
-                "n_tokens",
-                "tok_offset",
-                F.expr(_SHARD_ID).alias("shard_id"),
-            ),
-            path,
+        return out.select(
+            "doc_id",
+            "source",
+            "n_tokens",
+            "tok_offset",
+            F.expr(_SHARD_ID).alias("shard_id"),
         )
-    return spark.read.parquet(path)
+
+    return artifacts.read_or_publish(spark, _manifest_path(sf_dir), build)
 
 
 def _inc_manifest_oracle() -> str:

@@ -14,9 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tsengine import artifacts
 from tsengine.oracle.frags import SUP_METRICS_CTE, UNSUP_METRICS_CTE, with_ctes
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.tables import load_table
 from tsengine.sources.wearable import wearable_long, wearable_wide
 
 # ---------------------------------------------------------------------------
@@ -96,8 +97,6 @@ def scan_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wearable_long(spark, sf_dir)
 
 
-_CSV_DIR = os.environ.get("TSENGINE_CSV_DIR", "/tmp/tsengine_csv")
-
 _CSV_SCHEMA = T.StructType(
     [
         T.StructField("n_epochs", T.IntegerType()),
@@ -122,7 +121,7 @@ def scan_csv_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric table to CSV and reads it back with an explicit schema; the
     oracle recomputes the same table directly — verifying round-trip
     fidelity of the sink."""
-    out = sf_scoped_dir(_CSV_DIR, sf_dir, "unsup_metrics")
+    out = artifacts.scratch_dir(sf_dir, "csv_unsup_metrics")
     df = unsup_metrics(spark, sf_dir).select(
         F.col("n_epochs").cast("int"),
         "model",
@@ -165,7 +164,7 @@ def sink_csv_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped metric table to a header CSV and reads it back with an
     explicit schema; the oracle recomputes the table directly, so a
     hash match proves the sink loses nothing (types, header, values)."""
-    out = sf_scoped_dir(_CSV_DIR, sf_dir, "sup_metrics")
+    out = artifacts.scratch_dir(sf_dir, "csv_sup_metrics")
     df = sup_metrics(spark, sf_dir).select(
         F.col("n_epochs").cast("int"),
         "model",
@@ -175,8 +174,6 @@ def sink_csv_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_csv_single(df, out)
     return spark.read.csv(out, header=True, schema=_SUP_CSV_SCHEMA)
 
-
-_JSON_DIR = os.environ.get("TSENGINE_JSON_DIR", "/tmp/tsengine_json")
 
 _JSON_SCHEMA = T.StructType(
     [
@@ -203,7 +200,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the JSON sink+scan is lossless (ids, strings, md5 of the
     full text).  NDJSON is line-splittable — at 100 TB each file chunk
     scans in parallel exactly like the CSV/parquet paths."""
-    out = sf_scoped_dir(_JSON_DIR, sf_dir, "documents")
+    out = artifacts.scratch_dir(sf_dir, "json_documents")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -214,9 +211,6 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.json(out, schema=_JSON_SCHEMA)
 
 
-_ORC_DIR = os.environ.get("TSENGINE_ORC_DIR", "/tmp/tsengine_orc")
-
-_XML_DIR = os.environ.get("TSENGINE_XML_DIR", "/tmp/tsengine_xml")
 _XML_SCHEMA = (
     "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
     "o_totalprice double, o_orderpriority string"
@@ -242,7 +236,7 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically.  XML files split per row tag, so chunked parallel
     scan behaves like the NDJSON path at 100 TB (row-tag framing is
     the XML analog of NDJSON's line framing)."""
-    out = sf_scoped_dir(_XML_DIR, sf_dir, "orders")
+    out = artifacts.scratch_dir(sf_dir, "xml_orders")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
@@ -271,7 +265,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (int64, double, strings).  ORC stripes are splittable and carry
     min/max indexes, so pushdown and parallel scan behave like the
     parquet path at 100 TB."""
-    out = sf_scoped_dir(_ORC_DIR, sf_dir, "orders")
+    out = artifacts.scratch_dir(sf_dir, "orc_orders")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
@@ -596,15 +590,9 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract test) so the query touches 1/5 of the files — then
     aggregates.  The oracle recomputes from the source table directly:
     a hash match proves the partitioned round trip loses nothing."""
-    import hashlib
-
     ev = load_table(spark, sf_dir, "events")
-    # key the sink on a digest of the FULL sf_dir (two roots sharing a
-    # basename, or concurrent runs over them, must not race on the same
-    # mode('overwrite') directory); note the write happens eagerly here
-    # at plan-build time
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    out = os.path.join(_CSV_DIR, f"events_by_type_{tag}")
+    # the write happens eagerly here, at plan-build time
+    out = artifacts.scratch_dir(sf_dir, "events_by_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
     return back.groupBy("user_id").agg(
@@ -644,41 +632,17 @@ def dpp_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pruned join lose nothing.  DPP is on by default
     (``spark.sql.optimizer.dynamicPartitionPruning.enabled``) — no conf
     scoping needed, unlike the size-gated bloom rewrite."""
-    import hashlib
-
     ev = load_table(spark, sf_dir, "events")
-    # key the copy on a CONTENT fingerprint of the source (path + every
-    # file's name/size/mtime): repeat calls in a sweep reuse the copy,
-    # while regenerated testdata gets a fresh directory — a stale
-    # at-rest copy can never silently diverge from the oracle's source
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    h = hashlib.md5(src.encode())
-    paths = (
-        [os.path.join(r, f) for r, _d, fs in sorted(os.walk(src)) for f in sorted(fs)]
-        if os.path.isdir(src)
-        else [src]
+    # a build-once artifact keyed by the events fixture's content:
+    # repeat calls reuse the committed copy, a regenerated fixture gets
+    # a fresh one, so it can never silently diverge from the oracle's
+    # source
+    fact = artifacts.read_or_publish(
+        spark,
+        artifacts.artifact_path(sf_dir, "events_dpp", ("events",)),
+        lambda: ev,
+        "event_type",
     )
-    for p in paths:
-        st = os.stat(p)
-        h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    out = os.path.join(_CSV_DIR, f"events_dpp_{h.hexdigest()[:12]}")
-    # reuse only a COMMITTED copy (_SUCCESS marker): an interrupted prior
-    # write must not be silently reused.  Write to a temp dir and
-    # atomically rename on success; prune stale copies of older
-    # fingerprints so _CSV_DIR doesn't accumulate unboundedly.
-    import shutil
-
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        tmp = out + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-        os.replace(tmp, out)
-    for d in os.listdir(_CSV_DIR):
-        p = os.path.join(_CSV_DIR, d)
-        if d.startswith("events_dpp_") and p != out:
-            shutil.rmtree(p, ignore_errors=True)
-    fact = spark.read.parquet(out)
     dim = (
         ev.groupBy("event_type")
         .agg(F.avg("value").alias("_av"))
@@ -704,7 +668,6 @@ def dpp_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BUCKET_DB = "tsengine_buckets"
-_BUCKET_DIR = os.environ.get("TSENGINE_BUCKET_DIR", "/tmp/tsengine_buckets")
 
 
 @register(
@@ -729,38 +692,22 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout decision.
 
     The bucketed at-rest copies are managed tables written eagerly at
-    plan-build time into a /tmp-located database (content-fingerprinted
-    names; in-session reuse via the catalog).  The oracle recomputes
+    plan-build time into a database located in the artifact dir
+    (:mod:`tsengine.artifacts`; content-keyed names; in-session reuse
+    via the catalog).  The oracle recomputes
     the same join+agg from the raw parquet — a hash match proves the
     bucketed round trip loses nothing."""
-    import hashlib
-
     from tsengine.sources.bucketed import bucketed_join, ensure_bucketed
 
-    h = hashlib.md5(os.path.abspath(sf_dir).encode())
-    for t in ("lineitem", "orders"):
-        src = os.path.join(os.path.abspath(sf_dir), f"{t}.parquet")
-        paths = (
-            [os.path.join(r, f) for r, _d, fs in sorted(os.walk(src)) for f in sorted(fs)]
-            if os.path.isdir(src)
-            else [src]
-        )
-        for p in paths:
-            st = os.stat(p)
-            h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    fp = h.hexdigest()[:10]
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {_BUCKET_DB} LOCATION '{_BUCKET_DIR}'"
-    )
-    li_t, o_t = f"{_BUCKET_DB}.li_{fp}", f"{_BUCKET_DB}.o_{fp}"
-    ensure_bucketed(
-        spark, sf_dir, "lineitem", "l_orderkey", li_t,
-        os.path.join(_BUCKET_DIR, f"li_{fp}"),
-    )
-    ensure_bucketed(
-        spark, sf_dir, "orders", "o_orderkey", o_t,
-        os.path.join(_BUCKET_DIR, f"o_{fp}"),
-    )
+    def bucketed(table: str, key: str) -> str:
+        path = artifacts.artifact_path(sf_dir, f"bucketed_{table}", (table,))
+        # saveAsTable owns the write: the managed location <db>/<table>
+        # IS the artifact path, so the database lives in its parent dir
+        loc, leaf = os.path.split(path)
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {_BUCKET_DB} LOCATION '{loc}'")
+        return ensure_bucketed(spark, sf_dir, table, key, f"{_BUCKET_DB}.{leaf}", path)
+
+    li_t, o_t = bucketed("lineitem", "l_orderkey"), bucketed("orders", "o_orderkey")
     j = bucketed_join(
         spark, li_t, o_t, F.col("l_orderkey") == F.col("o_orderkey")
     )

@@ -17,18 +17,14 @@ ranking, with vec_id tie-breaks, so ranks agree across engines.
 
 from __future__ import annotations
 
-import errno
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tsengine import artifacts
 from tsengine.operators.dedup import _md5_int
 from tsengine.operators.graph import hash_min_components
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.tables import load_table
 
 _DIM = 64
 TOP_K = 5
@@ -937,149 +933,23 @@ def _knn_candidates(
 # kNN-graph materialization: build once, audit many (r10 verdict item 3)
 # ---------------------------------------------------------------------------
 
-_KNN_GRAPH_DIR = os.environ.get("TSENGINE_KNN_DIR", "/tmp/tsengine_knn")
-
 
 def _knn_graph_path(sf_dir: str, n_bits: int, variant: str = "") -> str:
-    """Artifact path for the materialized ranked graph, keyed by scale
-    factor (sf_scoped_dir's md5 tag), every graph dial, AND the
-    embeddings fixture's nanosecond mtime — a regenerated fixture
-    invalidates the cache instead of silently serving a graph of stale
-    vectors (``st_mtime_ns``, not whole-second ``getmtime``: a
-    same-second regeneration with different data must still miss).
+    """Artifact path for the materialized ranked graph: every graph dial
+    plus the embeddings fixture's content key (artifacts.artifact_path).
     ``variant`` keys sub-corpus artifacts (knn_graph_update's
     old-corpus index)."""
-    mt = os.stat(os.path.join(sf_dir, "embeddings.parquet")).st_mtime_ns
-    leaf = f"graph{variant}_k{TOP_K}_b{N_BANDS}x{n_bits}_m{mt}"
-    return sf_scoped_dir(_KNN_GRAPH_DIR, sf_dir, leaf)
-
-
-# leaf shape produced by _knn_graph_path (and the packing/gate-flag
-# artifacts that reuse the publish protocol), split into (prefix,
-# mtime tag, sf tag): superseded artifacts share prefix+sf but not
-# mtime.  Alternation, not a wildcard: GC must never match a leaf
-# family the publish path didn't mint.
-_GRAPH_LEAF_RE = re.compile(
-    r"^((?:graph|manifest|gateflags).*_m)(\d+)(_[0-9a-f]{10})$"
-)
-
-
-def _gc_graph_artifacts(path: str) -> None:
-    """Prune superseded siblings of a just-published artifact: same
-    graph/dial prefix and sf tag but a different (older-fixture) mtime
-    tag, plus any orphaned ``*.tmp.<pid>`` / ``*.old.<pid>`` staging
-    dirs for this leaf family.  Keyed-by-mtime caching means every
-    fixture regeneration mints a new directory; without GC the
-    superseded ones strand forever (ADVICE r11).  Only called after a
-    successful publish, so no reader can ever observe a PARTIAL write.
-    A concurrent long-lived session still scanning a superseded path
-    (its path was computed from the pre-regeneration fixture mtime)
-    CAN fail mid-read with a FileNotFoundException (ADVICE r12) — a
-    loud task error, never wrong data; its retry recomputes the path
-    from the current fixture and rebuilds.  That trade is deliberate:
-    an age-gated GC would leave corpus-sized artifacts stranded for
-    the grace window on every fixture regeneration."""
-    parent, leaf = os.path.dirname(path), os.path.basename(path)
-    m = _GRAPH_LEAF_RE.match(leaf)
-    if not m:  # unexpected shape: never guess at deletions
-        return
-    prefix, _, sftag = m.groups()
-    try:
-        siblings = os.listdir(parent)
-    except OSError:
-        return
-    for d in siblings:
-        if d == leaf:
-            continue
-        base = d.split(".tmp.")[0].split(".old.")[0]
-        sm = _GRAPH_LEAF_RE.match(base)
-        if not sm or sm.group(1) != prefix or sm.group(3) != sftag:
-            continue
-        if d != base and not _staging_pid_dead(d):
-            # a LIVE process's staging dir — for ANY leaf of the
-            # family, not just the one we published: a long-lived
-            # concurrent session may be mid-write to a superseded-
-            # mtime leaf (its path was computed from the
-            # pre-regeneration fixture), and rmtree under it would
-            # crash that writer at its rename (ADVICE r12)
-            continue
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-
-
-def _staging_pid_dead(dirname: str) -> bool:
-    """True iff ``dirname`` is a ``*.tmp.<pid>`` / ``*.old.<pid>``
-    staging dir whose owning process no longer exists (safe to GC)."""
-    tail = dirname.rsplit(".", 1)[-1]
-    if not tail.isdigit():
-        return False
-    try:
-        os.kill(int(tail), 0)
-    except ProcessLookupError:
-        return True
-    except OSError:
-        return False  # EPERM etc: process exists (or unknowable) — keep
-    return False
-
-
-def _publish_graph(df: DataFrame, path: str) -> None:
-    """Atomic artifact publish: write to a pid-suffixed temp dir, one
-    ``os.rename`` into place.  The destination is NEVER deleted first
-    (ADVICE r11: rmtree-then-rename left a window where a concurrent
-    reader saw an absent artifact): a rename onto an existing complete
-    artifact fails with EEXIST/ENOTEMPTY, which means a concurrent
-    publisher already won with the identical (deterministic build)
-    copy — ours is discarded; an existing INCOMPLETE occupant (no
-    _SUCCESS: a legacy or crashed layout) is renamed aside and only
-    removed after the new artifact is in place, so readers observe the
-    old-complete or new-complete state, never an empty path.
-    Unexpected OSErrors re-raise instead of silently discarding the
-    build.  Successful publish prunes superseded-mtime siblings
-    (:func:`_gc_graph_artifacts`)."""
-    tmp = f"{path}.tmp.{os.getpid()}"
-    df.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError as exc:
-        if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # concurrent publisher won; builds are deterministic so the
-            # occupant is bit-identical — discard ours
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # crashed/legacy occupant (no _SUCCESS): swap it aside and
-            # move ours in.  TWO publishers can reach this branch at
-            # once (ADVICE r12): the loser's rename(path, aside) races
-            # ENOENT (the winner swapped the occupant first), and its
-            # final rename races EEXIST/ENOTEMPTY (the winner already
-            # published a complete copy).  Both interleavings end with
-            # a complete artifact in place, so the loser discards its
-            # build; any other failure re-raises.
-            aside = f"{path}.old.{os.getpid()}"
-            try:
-                os.rename(path, aside)
-            except FileNotFoundError:
-                aside = None  # concurrent publisher swapped it first
-            try:
-                os.rename(tmp, path)
-            except OSError as exc2:
-                if exc2.errno not in (
-                    errno.EEXIST,
-                    errno.ENOTEMPTY,
-                ) or not os.path.exists(os.path.join(path, "_SUCCESS")):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)  # winner published
-            if aside is not None:
-                shutil.rmtree(aside, ignore_errors=True)
-    _gc_graph_artifacts(path)
+    return artifacts.artifact_path(
+        sf_dir, f"graph{variant}_k{TOP_K}_b{N_BANDS}x{n_bits}", ("embeddings",)
+    )
 
 
 def _knn_graph_cached(
     spark: SparkSession, sf_dir: str, n_bits: int = N_BITS
 ) -> DataFrame:
     """The ranked kNN graph, read from the materialized artifact —
-    built on first use via :func:`knn_graph_materialize`.  All graph
+    built and published on first use (:func:`knn_graph_materialize`'s
+    build).  All graph
     AUDITS (hubness, label vote, SNN, assortativity, PageRank,
     triangles) read this instead of re-running the LSH build: in
     production the graph is the persisted asset and audits are cheap
@@ -1090,10 +960,11 @@ def _knn_graph_cached(
     Parquet roundtrip is value-exact (doubles are stored bit-for-bit),
     so every consumer's oracle — which recomputes the graph from the
     CTEs — still hash-matches."""
-    path = _knn_graph_path(sf_dir, n_bits)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        return knn_graph_materialize(spark, sf_dir, n_bits)
-    return spark.read.parquet(path)
+    return artifacts.read_or_publish(
+        spark,
+        _knn_graph_path(sf_dir, n_bits),
+        lambda: knn_join_lsh(spark, sf_dir, n_bits=n_bits),
+    )
 
 
 @register(
@@ -1111,14 +982,15 @@ def knn_graph_materialize(
     Returns the read-back graph so the registered query verifies the
     ARTIFACT, not the in-flight plan.
 
-    Publish protocol: :func:`_publish_graph` (atomic staged rename).
+    Publish protocol: :func:`tsengine.artifacts.publish` (atomic
+    staged rename).
 
     100 TB shape: the build is :func:`knn_join_lsh` unchanged (its
     scale analysis applies); the write adds one pass over the skinny
     ranked graph ({TOP_K} rows x 4 cols per vector — parquet output is
     a small multiple of the vec_id column, never vectors)."""
     path = _knn_graph_path(sf_dir, n_bits)
-    _publish_graph(knn_join_lsh(spark, sf_dir, n_bits=n_bits), path)
+    artifacts.publish(knn_join_lsh(spark, sf_dir, n_bits=n_bits), path)
     return spark.read.parquet(path)
 
 
@@ -1210,28 +1082,26 @@ def _knn_old_graph_cached(
     from its own artifact — the persisted index a daily-ingest
     pipeline maintains; built on first use with the identical plan as
     :func:`knn_join_lsh` restricted to the old corpus."""
-    path = _knn_graph_path(sf_dir, n_bits, variant=f"_old{_INC_MOD}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        old = _rank_topk(
+    return artifacts.read_or_publish(
+        spark,
+        _knn_graph_path(sf_dir, n_bits, variant=f"_old{_INC_MOD}"),
+        lambda: _rank_topk(
             _knn_candidates(
                 spark,
                 sf_dir,
                 n_bits,
                 id_filter=F.col("vec_id") % _INC_MOD != 0,
             )
-        )
-        _publish_graph(old, path)
-    return spark.read.parquet(path)
+        ),
+    )
 
 
 def _gate_flags_path(sf_dir: str) -> str:
     """Artifact path for the persisted old-corpus Gopher gate flags,
-    keyed like the graph artifact: sf tag + the DOCUMENTS fixture's
-    nanosecond mtime (the flags are a pure function of document text,
-    so a regenerated fixture is the only invalidation event)."""
-    mt = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    leaf = f"gateflags_old{_INC_MOD}_m{mt}"
-    return sf_scoped_dir(_KNN_GRAPH_DIR, sf_dir, leaf)
+    keyed by the DOCUMENTS fixture's content (the flags are a pure
+    function of document text, so a regenerated fixture is the only
+    invalidation event)."""
+    return artifacts.artifact_path(sf_dir, f"gateflags_old{_INC_MOD}", ("documents",))
 
 
 def _gate_flags_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1252,20 +1122,15 @@ def _gate_flags_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsengine.operators.text import _gopher_flags
 
     docs = load_table(spark, sf_dir, "documents")
+
+    def gated(batch):
+        flags = _gopher_flags(docs.filter(batch))
+        return flags.filter(F.col("keep") == 1).select("doc_id")
+
+    is_new = F.col("doc_id") % _INC_MOD == 0
     path = _gate_flags_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        old = (
-            _gopher_flags(docs.filter(F.col("doc_id") % _INC_MOD != 0))
-            .filter(F.col("keep") == 1)
-            .select("doc_id")
-        )
-        _publish_graph(old, path)
-    new = (
-        _gopher_flags(docs.filter(F.col("doc_id") % _INC_MOD == 0))
-        .filter(F.col("keep") == 1)
-        .select("doc_id")
-    )
-    return spark.read.parquet(path).unionByName(new)
+    old = artifacts.read_or_publish(spark, path, lambda: gated(~is_new))
+    return old.unionByName(gated(is_new))
 
 
 @register(
