@@ -29,6 +29,7 @@ import threading
 from conftest import SF_DIR as SF_A
 from conftest import SF_DIR_ORACLE as SF_B
 
+
 def _n_exchanges(df) -> int:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return len(re.findall(r"Exchange (?:hash|range)partitioning", plan))
