@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from tsengine.registry import all_queries
 from tsengine.streaming.windows import (
@@ -123,3 +124,145 @@ def test_interval_join_stream_matches_batch(spark, sf_dir):
     )
     pd.testing.assert_frame_equal(_canon(streamed), _canon(batch), check_dtype=False)
     assert streamed.count() > 0
+
+
+_DRAIN_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+_STREAM_QUERIES = sorted(
+    n for n, q in all_queries().items() if q.fn.__module__ == "tsengine.streaming.queries"
+)
+
+
+def test_registry_has_twelve_drains():
+    assert len(_STREAM_QUERIES) == 12, _STREAM_QUERIES
+
+
+def test_drain_confs_scoped_to_query_start(spark, sf_dir, monkeypatch):
+    """A stream copies the session conf at start, so the drain's state-
+    partition and no-data-batch confs must already be restored while it
+    runs: the caller's session never sees them during the drain."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    caller = {k: spark.conf.get(k, None) for k in _DRAIN_CONFS}
+    seen = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def reading_confs(self, *args, **kwargs):
+        seen.append({k: spark.conf.get(k, None) for k in _DRAIN_CONFS})
+        return await_termination(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", reading_confs)
+    streamed = run_available_now(tumbling_stream(read_events_stream(spark, sf_dir)), "t_scoped")
+    assert seen == [caller]
+    assert streamed.count() > 0
+
+
+def test_concurrent_drains_leave_session_conf_unchanged(spark, sf_dir):
+    """Two threads drain overlapping streams (the second starts while the
+    first runs); neither may leave its state-partition count behind."""
+    import threading
+    import time
+
+    queries = all_queries()
+    before = spark.conf.getAll
+    for _ in range(3):
+        errors = []
+
+        def drain(name, delay):
+            time.sleep(delay)
+            try:
+                queries[name].fn(spark, sf_dir).count()
+            except Exception as e:  # noqa: BLE001 - reported by the assert below
+                errors.append(e)
+
+        threads = [
+            threading.Thread(target=drain, args=("stream_tumbling", 0.0)),
+            threading.Thread(target=drain, args=("stream_interval_join", 0.3)),
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        assert spark.conf.getAll == before
+
+
+def test_drain_drops_sink_view_on_every_path(spark, sf_dir):
+    """Neither a successful nor a failing drain leaves its memory-sink
+    temp view in the session, and the successful drain's result still
+    counts after its view is gone."""
+    from pyspark.sql import functions as F
+
+    def boom(v):
+        raise RuntimeError("injected kernel failure")
+
+    views = sorted(t.name for t in spark.catalog.listTables())
+    ev = read_events_stream(spark, sf_dir)
+    streamed = run_available_now(tumbling_stream(ev), "t_view_ok")
+    failing = tumbling_stream(ev.withColumn("value", F.udf(boom, "double")("value")))
+    with pytest.raises(Exception, match="injected kernel failure"):
+        run_available_now(failing, "t_view_fail")
+    assert sorted(t.name for t in spark.catalog.listTables()) == views
+    assert streamed.count() == all_queries()["tumbling_window_agg"].fn(spark, sf_dir).count()
+
+
+@pytest.fixture(scope="module")
+def drain_events(spark):
+    """Streaming listener on the session: progress events by run id and
+    the run ids whose terminated event has arrived."""
+    import collections
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class _DrainEvents(StreamingQueryListener):
+        def __init__(self):
+            self.input_rows = collections.defaultdict(list)
+            self.terminated = set()
+            self.cond = threading.Condition()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            with self.cond:
+                self.input_rows[str(event.progress.runId)].append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.cond:
+                self.terminated.add(str(event.runId))
+                self.cond.notify_all()
+
+        def wait_terminated(self, run: str, timeout: float) -> bool:
+            with self.cond:
+                return self.cond.wait_for(lambda: run in self.terminated, timeout)
+
+    listener = _DrainEvents()
+    spark.streams.addListener(listener)
+    yield listener
+    spark.streams.removeListener(listener)
+
+
+@pytest.mark.parametrize("name", _STREAM_QUERIES)
+def test_drain_runs_only_batches_with_data(spark, sf_dir, drain_events, monkeypatch, name):
+    """Every micro-batch of a registered drain reads input rows: the
+    trailing watermark-only batch is skipped."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    runs = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def recording_run(self, *args, **kwargs):
+        runs.append(str(self.runId))
+        return await_termination(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", recording_run)
+    all_queries()[name].fn(spark, sf_dir).count()
+    assert runs
+    for run in runs:
+        assert drain_events.wait_terminated(run, 60), f"no terminated event for {name} run {run}"
+        with drain_events.cond:
+            batches = list(drain_events.input_rows[run])
+        assert batches and all(n > 0 for n in batches), (name, batches)

@@ -2,12 +2,16 @@
 """Run every registered query against its DuckDB oracle — a local
 replica of the driver's t2 correctness gate.  Usage:
 
-    python tools/check_oracle.py [--sf DIR] [--only name[,name...]]
+    python tools/check_oracle.py [--sf DIR] [--only pattern[,pattern...]]
+
+``--only`` takes query names or fnmatch patterns: ``--only 'stream_*'``
+runs the 12 streaming drains.
 """
 
 from __future__ import annotations
 
 import argparse
+import fnmatch
 import os
 import sys
 import time
@@ -27,11 +31,11 @@ def main() -> int:
 
     spark = get_spark("check-oracle")
     con = duck_connect(args.sf)
-    names = args.only.split(",") if args.only else None
+    patterns = args.only.split(",") if args.only else None
 
     n_ok = n_fail = n_rows_only = 0
     for name, q in sorted(all_queries().items()):
-        if names and name not in names:
+        if patterns and not any(fnmatch.fnmatchcase(name, p) for p in patterns):
             continue
         t0 = time.time()
         try:

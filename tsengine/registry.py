@@ -56,8 +56,10 @@ _REGISTRY: dict[str, Query] = {}
 # before the commit), duplicate_spans / pipeline_corpus_v2 (r14
 # single-subtree span rewrites), before_training_grid /
 # unsup_epoch_curves (r14 thread-pooled probe fits), and all 12
-# streaming drains (r14 state-partition sizing in run_available_now)
-# — then fills with the 33 stalest names (no r12 or r13 driver row).
+# streaming drains (run_available_now: state partitions sized by
+# volume, no trailing no-data micro-batch, both confs scoped to the
+# query's start) — then fills with the 33 stalest names (no r12 or
+# r13 driver row).
 # Everything outside the cut keeps its prior driver rows plus full
 # local verification per round (tests/test_oracle_all.py +
 # tools/check_oracle.py at sf0.01 AND sf0.1).

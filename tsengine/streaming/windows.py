@@ -18,11 +18,15 @@ sink_metrics_log).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _HOUR_SEC = 3600
+
+# serializes the set / start / restore of a drain's confs (run_available_now)
+_START_LOCK = threading.Lock()
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,33 +190,67 @@ def run_available_now(
     Stateful aggregations drain in ``complete`` mode; join/projection
     streams have no complete-mode semantics and use ``append``.
 
-    State-partition sizing (r14, guide §2.2 applied to state stores):
-    every stateful operator commits one delta file PER (partition,
-    state store) per micro-batch — fsync-bound, independent of state
-    volume.  At the session default of 32 shuffle partitions a single
-    drained batch of the fixture paid 128 near-empty commits
-    (stream_interval_join: 60s of cumulative commit task-time, 8.9s
-    wall for KBs of state).  Drains therefore size state partitions by
-    state VOLUME via ``TSENGINE_STREAM_STATE_PARTITIONS`` (default 8 —
-    still multi-partition, so distribution bugs stay visible); a real
-    deployment with GBs of state overrides upward.  Hash partitioning
-    by key is unchanged, so results are identical at any setting."""
+    Two confs are scoped to the drain:
+
+    - ``spark.sql.shuffle.partitions`` sizes the state stores by state
+      VOLUME via ``TSENGINE_STREAM_STATE_PARTITIONS`` (default 8 — still
+      multi-partition, so distribution bugs stay visible).  Every
+      stateful operator commits one delta file PER (partition, state
+      store) per micro-batch, fsync-bound and independent of state
+      volume: at the session default of 32 a single drained batch of
+      the fixture paid 128 near-empty commits.  Hash partitioning by
+      key is unchanged, so results are identical at any setting.
+    - ``spark.sql.streaming.noDataMicroBatches.enabled=false`` skips the
+      trailing micro-batch that has no input rows and only advances the
+      watermark and evicts state.  Such a batch emits rows for only
+      three query shapes: an append-mode aggregation over a watermark,
+      an outer stream-stream join (unmatched rows leave on eviction),
+      and event-time timeouts or timers.  No registered drain is one of
+      them: the window aggregations drain in complete mode, the
+      interval join is inner, dedup emits on first sight and every
+      ``applyInPandasWithState`` kernel uses ``NoTimeout``.  A caller
+      that drains one of those shapes must not use this helper.
+
+    A streaming query copies the session conf when it starts, so both
+    confs are set only around ``.start()``, under one module lock, and
+    restored before ``awaitTermination``: the caller's session is
+    changed for the start call alone, and two drains on different
+    threads cannot restore each other's values.  The drain stays on the
+    caller's session rather than ``spark.newSession()`` because a
+    ``StreamingQueryListener`` on the caller's session receives no
+    progress events from a query started on another session.
+
+    The memory sink's temp view is dropped once the query has started,
+    whether it succeeds or fails; the returned DataFrame was analyzed
+    before the drop and keeps the drained rows."""
     spark = stream_df.sparkSession
-    n_state = os.environ.get("TSENGINE_STREAM_STATE_PARTITIONS", "8")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_state)
+    scoped = {
+        "spark.sql.shuffle.partitions": os.environ.get("TSENGINE_STREAM_STATE_PARTITIONS", "8"),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    with _START_LOCK:
+        old = {k: spark.conf.get(k, None) for k in scoped}
+        try:
+            for k, v in scoped.items():
+                spark.conf.set(k, v)
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(query_name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
         q.awaitTermination()
+        return spark.sql(f"SELECT * FROM {query_name}")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {query_name}")
+        spark.catalog.dropTempView(query_name)
 
 
 def metrics_log_sink(stream_df: DataFrame, log: list) -> None:
